@@ -3267,15 +3267,10 @@ def ann_knn_join(spark, sf_dir):
 
 
 def ann_knn_join_blas(spark, sf_dir):
-    """Scale variant of ann_knn_join: numpy-BLAS partition SELECTION
-    (method='blas', ~12x the exact path's scoring throughput at
-    sf0.1) with a 2e-6 tie margin, then exact JVM re-scoring of the
-    <= partitions x |Q| x k survivors with the exact path's own
-    expressions. BLAS-vs-sequential ulp effects cannot cross the
-    margin, so the output is bit-identical to ann_knn_join and the
-    SAME DuckDB oracle replays it (r8's rows-only caveat removed;
-    bit-exactness vs the exact path is also asserted in
-    tests/test_pipeline_ops.py)."""
+    """ann_knn_join under the method="blas" name: knn_join has one
+    path (BLAS selection + exact JVM re-score, similarity/_kernel.py)
+    and both method names reach it, so the output is bit-identical to
+    ann_knn_join and the SAME DuckDB oracle replays it."""
     from csp_spark.similarity import knn_join
 
     emb = _t(spark, sf_dir, "embeddings")
@@ -3862,156 +3857,20 @@ def entry(spark: SparkSession) -> DataFrame:
     return q1_pricing_summary(spark, "/root/testdata/sf0.001")
 
 
-#: r10 evidence rotation (r9 verdict item 1): ann_knn_join_blas LEADS —
-#: its BLAS path changed materially in r9 (margin-select + exact
-#: re-score + shared oracle) but missed the r9 prefix, so this is its
-#: FIRST driver oracle attestation, completing the "all 144
-#: oracle-backed" claim with driver evidence. Behind it, the remaining
-#: 47 queries whose latest driver evidence is r7 (oldest-first), then
-#: the 2 queries whose plan passes through this round's ann.py changes
-#: (kmeans++ exact-zero D2 pin at picked centers; known_count reuse in
-#: the train-collect guard; BLAS margin 2e-6 -> 2.5e-6):
-#: ann_ivf_topk + ann_hard_negatives. ann_ivf_exact (centroid-invariant
-#: by construction: n_probe=n_cells == brute force) and ann_pq_topk
-#: (uniform init, untouched) were locally re-gated green at sf0.01;
-#: the kmeans++ picks were empirically verified bit-identical pre/post
-#: fix at the tested scales. After r10 no query's evidence is older
-#: than r8.
-_R10_PREFIX = [
-    "ann_knn_join_blas",
-    # 47 remaining r7-stale, oldest-first
-    "op_merge", "op_filter", "op_gate",
-    "op_struct_fromts", "op_struct_collectts",
-    "feedback_clamp",
-    "stats_ema_halflife", "stats_rank", "stats_weighted",
-    "dedup_embedding",
-    "text_stats", "text_langid",
-    "dedup_exact", "dedup_ngram",
-    "op_exprtk", "text_fingerprint", "ann_lsh_topk",
-    "stats_ema_var", "op_struct_record", "op_exprtk_state",
-    "op_accum_global",
-    "doc_weighted_sample", "doc_cap_per_source",
-    "op_asof_directions", "stats_ohlc_bars",
-    "doc_repeated_spans", "text_lm_score", "doc_mixture",
+# r14 rotation: every query whose code path this round changed leads
+# (the BLAS-select + exact-rescore similarity kernel behind knn_join,
+# hard_negatives, cosine_pairs_above and semdedup; dynamic_apply's snap
+# as-of pick), then the oldest (r10-stamped) driver evidence.
+_R14_PREFIX = [
+    # changed paths
+    "ann_knn_join", "ann_knn_join_blas", "ann_hard_negatives",
+    "doc_semdedup", "dedup_embedding", "dyn_snap_attach",
+    # oldest-evidence (r10-stamped) fill slots
+    "op_asof_directions", "stats_ohlc_bars", "doc_mixture",
     "sink_parquet_roundtrip", "sink_csv_roundtrip", "sink_arrow_roundtrip",
-    "op_windowed_global", "op_windowed_global_time",
     "op_exprtk_vec", "text_boilerplate", "doc_decontaminate",
     "text_term_stats", "text_tfidf", "text_quality_model",
-    "op_feedback_scan", "basket_sync_trigger",
-    "op_node_cumsum", "op_node_ast",
-    "doc_semdedup", "doc_dsir", "doc_gopher", "doc_c4",
-    # 2 changed-code queries (r10 ann.py kmeans++/guard changes)
-    "ann_ivf_topk", "ann_hard_negatives",
-]
-
-#: r11 evidence rotation (VERDICT r10 item 1): the 46 r8-stamped
-#: queries, oldest evidence first — the full op_* element-wise block,
-#: dedup minhash/simhash/components, the packing family, the dynamic
-#: graphs, mm_features, the two r8 ann paths, the four r8 TPC-H
-#: queries, the random sources, and the six r8 stats options — then 4
-#: oldest-r9 fill slots (q1/q2/q4/q7). r11's code changes (adapter
-#: surfaces: DBReader partitioned JDBC + empty-window, CSVReader
-#: converter/symbol guards, portability exports) touch NO driver query
-#: plan, so no changed-plan entries are owed this round. After r11 no
-#: query's evidence is older than r9.
-_R11_PREFIX = [
-    "op_accum", "op_apply", "op_burst", "op_collect", "op_count",
-    "op_default", "op_delay", "op_demultiplex", "op_diff",
-    "op_dropdups", "op_dropdups_eps", "op_dropnans", "op_firstn",
-    "op_flatten", "op_last_value", "op_multiplex", "op_sample_asof",
-    "op_sessionize", "op_split_false", "op_unroll",
-    "op_hot_key_running",
-    "dedup_minhash", "dedup_simhash", "dedup_components",
-    "doc_incremental_dedup",
-    "doc_pack", "doc_pack_fit", "doc_pack_manifest", "doc_token_ids",
-    "dyn_cummax", "dyn_snap_attach",
-    "mm_features",
-    "ann_pq_topk", "ann_topk",
-    "q3_shipping_priority", "q5_local_supplier_volume",
-    "q6_forecast_revenue", "q10_returned_items",
-    "random_poisson", "random_brownian",
-    "stats_ema_adjust", "stats_minmax_sem", "stats_sampler",
-    "stats_trigger_reset", "stats_unique", "stats_xsec",
-    # 4 oldest-r9 fill slots
-    "q1_pricing_summary", "q2_min_cost_supplier", "q4_order_priority",
-    "q7_volume_shipping",
-]
-
-# r12 rotation (VERDICT r11 task 1): the 44 r9-stamped queries (the
-# q8-q22 TPC-H block, the r9 stats block, src/basket/op r9 stragglers,
-# the bpe/split/chunk doc family, frame_pandas_ts, ann_ivf_exact,
-# ann_knn_join, text_repetition — 44), plus the three queries whose
-# paths r12 touched (random_brownian: const-edge local_rows fold;
-# op_node_ast/op_node_cumsum: nodeparse closure-cell support), filled
-# to 50 with r10 stamps (op_filter, op_feedback_scan, op_merge).
-# After this round no query's driver evidence is older than r10.
-_R12_PREFIX = [
-    "q8_market_share", "q9_product_profit", "q11_important_stock",
-    "q12_shipmode_priority", "q13_customer_distribution",
-    "q14_promo_revenue", "q15_top_supplier", "q16_supplier_part_count",
-    "q17_small_quantity_revenue", "q18_large_volume_customer",
-    "q19_discounted_revenue", "q20_part_promotion",
-    "q21_suppliers_kept_waiting", "q22_global_sales_opportunity",
-    "stats_rolling_tick", "stats_rolling_time", "stats_expanding",
-    "stats_quantile", "stats_order", "stats_ema", "stats_ema_cov",
-    "stats_corr", "stats_argminmax", "stats_cov_matrix",
-    "stats_skew_kurt",
-    "src_curve", "src_timer",
-    "basket_sync", "basket_sample",
-    "op_edge_math", "op_times", "op_value_at", "op_struct_field",
-    "op_dynamic_collect",
-    "doc_bpe_tokens", "doc_bpe_apply", "doc_chunk", "doc_split",
-    "doc_group_split", "doc_repeat_epochs",
-    "frame_pandas_ts",
-    "ann_ivf_exact", "ann_knn_join",
-    "text_repetition",
-    "random_brownian", "op_node_ast", "op_node_cumsum",
-    "op_filter", "op_feedback_scan", "op_merge",
-]
-
-# r13 rotation (VERDICT r12 item 1 — the top-leverage task): pin every
-# query whose code path r12 OR r13 changed, converting builder-attested
-# results into driver-attested ones. 33 changed-path pins — the r12
-# rewrites that rotated out of the r12 oracle sample (q2's window-MIN,
-# op_windowed_global's prefix difference + overflow guard, the four
-# BLAS passes, simhash/mm verify-first, dynamic_apply bucketing,
-# incremental_dedup semi-reduction, sessionize/sample_asof fusions,
-# repeated_spans/fingerprint/dsir/lm/text codegen forms, components
-# probe, stats_ema_adjust, the three probe-scan folds) plus every path
-# r13 touches (dedup_minhash's scoped-codegen signature stage,
-# frame_pandas_ts persist/broadcast, the run_node shared-exchange
-# align, dynamic_apply NULL-key prune, knn_join fallback fix,
-# dedup_embedding collect guard). Filled to 50 with the 17 oldest
-# (r10-stamped) evidence slots. Still r10-stamped after this round
-# (next rotation's fill candidates): op_asof_directions,
-# stats_ohlc_bars, doc_mixture, the three sink_* roundtrips,
-# op_exprtk_vec, text_boilerplate, doc_decontaminate, text_term_stats,
-# text_tfidf, text_quality_model, basket_sync_trigger.
-_R13_PREFIX = [
-    # r12/r13 changed paths (driver-attest these first)
-    "q2_min_cost_supplier",
-    "op_windowed_global", "op_windowed_global_time",
-    "op_hot_key_running", "op_accum",
-    "doc_semdedup", "dedup_embedding",
-    "dedup_simhash", "mm_features",
-    "dyn_snap_attach", "dyn_cummax",
-    "doc_incremental_dedup",
-    "op_sessionize", "op_sample_asof",
-    "doc_repeated_spans", "text_fingerprint",
-    "ann_hard_negatives", "doc_dsir",
-    "dedup_components", "stats_ema_adjust",
-    "ann_topk", "ann_lsh_topk", "ann_ivf_topk",
-    "text_stats", "doc_gopher", "doc_c4", "text_lm_score",
-    "dedup_minhash", "frame_pandas_ts",
-    "op_node_ast", "op_node_cumsum",
-    "ann_knn_join", "ann_knn_join_blas",
-    # 17 oldest-evidence (r10-stamped) fill slots
-    "op_gate", "op_struct_fromts", "op_struct_collectts",
-    "feedback_clamp", "stats_ema_halflife", "stats_rank",
-    "stats_weighted", "text_langid", "dedup_exact", "dedup_ngram",
-    "op_exprtk", "stats_ema_var", "op_struct_record",
-    "op_exprtk_state", "op_accum_global", "doc_weighted_sample",
-    "doc_cap_per_source",
+    "basket_sync_trigger",
 ]
 
 
@@ -4163,11 +4022,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "text_lm_score": text_lm_score,
     }
     # The correctness harness evaluates a bounded prefix (50) of this
-    # dict — _R13_PREFIX (above) carries this round's evidence rotation;
+    # dict — _R14_PREFIX (above) carries this round's evidence rotation;
     # behind it, oracle-checked queries come before any rows-only rest
     # (none since r9: ann_knn_join_blas gained the shared knn oracle).
     o = oracle_sql()
-    front = {k: q[k] for k in _R13_PREFIX if k in q}
+    front = {k: q[k] for k in _R14_PREFIX if k in q}
     return {
         **front,
         **{k: v for k, v in q.items() if k in o and k not in front},

@@ -11,11 +11,14 @@ surviving ones — both properties are preserved here.
 
 Scale shape (100 TB contract): clustering bounds candidate
 generation to sum(|cell|^2) instead of N^2 — n_clusters is the knob
-(the paper uses 50k clusters for LAION). The in-cell self-join rides
-:func:`csp_spark.dedup.dedup._capped_bucket_pairs`, so a degenerate
-cell (e.g. an all-zeros embedding family) is star-grouped through
-its exact-signature hash instead of exploding quadratically, with
-the recall loss logged. Vectors travel only within their cell's
+(the paper uses 50k clusters for LAION). Each cell is scored in one
+pass of the similarity kernel (csp_spark/similarity/_kernel.py: BLAS
+selection, exact JVM re-check of the margin band and of degenerate
+vectors). A cell past ``cap`` rides
+:func:`csp_spark.dedup.dedup._capped_bucket_pairs` instead, so a
+degenerate cell (e.g. an all-zeros embedding family) is star-grouped
+through its exact-signature hash instead of exploding quadratically,
+with the recall loss logged. Vectors travel only within their cell's
 shuffle partition; the centroid table is n_clusters x dim — always
 broadcast. KMeans trains on the deterministic md5 identity sample
 (see ivf_index), never a full-corpus scan.
@@ -33,6 +36,7 @@ from pyspark.sql import functions as F
 
 import math as _math
 
+from ..similarity._kernel import MARGIN, select, vec_matrix
 from ..similarity.ann import cosine, dot, ivf_index, norm
 from .dedup import _capped_bucket_pairs
 
@@ -118,18 +122,11 @@ def semdedup(
         F.struct(F.col("__csim"), F.col("id")) if keep == "edge"
         else F.struct(F.col("id"))
     )
-    if keep == "edge":
-        # the decision pass must replay the JVM struct comparison, and
-        # Arrow delivers BOTH a NULL __csim (zero divisor — ranks
-        # SMALLEST) and a NaN __csim (NaN inputs — ranks LARGEST under
-        # nanSafeCompare) as NaN; ship the engine's own NULL flag so
-        # the two are split exactly as the JVM sees them
-        cells = cells.withColumn("__csim_null", F.col("__csim").isNull())
     rows = cells.select(
         "id", "cell", "v",
-        # the BLAS decision pass replays the __ord struct comparison
-        # from its components — carry the csim column itself for edge
-        *(["__csim", "__csim_null"] if keep == "edge" else []),
+        # the decision pass replays the __ord struct comparison from its
+        # components — carry the csim column itself for edge
+        *(["__csim"] if keep == "edge" else []),
         ord_col.alias("__ord"),
         # exact-signature hash for the degenerate-cell star grouping:
         # identical vectors share it, and payload (v, __ord with
@@ -139,23 +136,14 @@ def semdedup(
         # valid dup-pair removal
         F.xxhash64(F.col("v").cast("string")).alias("__sigh"),
     )
-    # Removal decisions are a per-cell BLAS pass (r12; the
-    # hard_negatives _select_pairs discipline): the former in-cell
-    # self-join evaluated the interpreted zip_with/aggregate cosine
-    # inside the join condition on EVERY pair — for n_clusters=1 the
-    # constant cell key even folded away, leaving a single-task
-    # BroadcastNestedLoopJoin (executor dump: ArrayAggregate.eval in
-    # the bound condition; 60-110 s at sf0.1 vs ~1 s after). One numpy
-    # matmul per cell decides every pair whose |cosine - eps| clears a
-    # 1e-9 margin (BLAS vs the JVM's sequential fold differs by
-    # ~1e-13); only margin-band pairs — typically zero — are re-scored
-    # with the exact former JVM expressions, so the removed-id SET is
-    # identical. Degenerates match the JVM exactly: NaN-element pairs
-    # (JVM cosine NaN; nanSafeCompare makes NaN >= eps TRUE) are sure
-    # removals, while zero-norm pairs (JVM divisor exactly 0 → NULL →
-    # the filter KEEPS them) go through the exact recheck.
-    # Over-cap cells keep the star/salt guard path with the former
-    # exact filter (bounded pair volume by construction, logged).
+    # Removal decisions are one similarity-kernel pass per cell
+    # (similarity/_kernel.py): a pair whose rounded BLAS score is at
+    # least eps + MARGIN is certainly a duplicate and is decided here;
+    # the kernel's other candidates — the margin band around eps and
+    # every degenerate pair — get the exact JVM test, so the removed-id
+    # SET equals the all-pairs JVM form. Over-cap cells keep the
+    # star/salt guard path with the exact filter (bounded pair volume
+    # by construction, logged).
     sizes = rows.groupBy("cell").agg(F.count(F.lit(1)).alias("__n"))
     over_rows = sizes.filter(F.col("__n") > cap).collect()
     removed_parts = []
@@ -187,114 +175,57 @@ def semdedup(
         StructField("__xb", id_type),
     ])
     eps_f = float(eps)
-    margin = 1e-9
     edge_order = keep == "edge"
 
     def _decide(pdf):
         import numpy as np
         import pandas as pd
 
-        n = len(pdf)
-        empty = pd.DataFrame({
-            "__kind": pd.Series([], dtype="int8"),
-            "__xa": pd.Series([], dtype=pdf["id"].dtype),
-            "__xb": pd.Series([], dtype=pdf["id"].dtype),
-        })
-        if n < 2:
-            return empty
-        from ..similarity.ann import _vec_matrix
-
-        dim = len(pdf["v"].iloc[0])
-        V = _vec_matrix(pdf["v"], dim, "semdedup", "v")
-        norms = np.sqrt((V * V).sum(axis=1))
         ids = pdf["id"].to_numpy()
-        # keep-order rank replaying the JVM struct comparison: for
-        # "edge" (__csim, id) with NaN mapped to +inf (Spark's
-        # nanSafeCompare ranks NaN above every double and equal to
-        # itself, falling through to the id; cosine cannot be a real
-        # +inf, so the mapping is exact), else id alone; ids are
-        # unique, so the rank is total — higher rank == worse == the
-        # removed side of a duplicate pair
+        # keep-order rank replaying the JVM __ord struct comparison —
+        # (__csim, id) for "edge", else id; higher rank == worse == the
+        # removed side of a duplicate pair. A pair decided here has two
+        # finite vectors of non-zero norm, so its two __csim are finite,
+        # or both NULL or both NaN (a zero or NaN centroid makes the
+        # whole cell's __csim so); Arrow delivers both as NaN, and
+        # mapping NaN to +inf keeps such ties tied, falling through to
+        # the id as the struct comparison does.
+        key = {"i": ids}
         if edge_order:
             csim = pdf["__csim"].to_numpy(dtype=np.float64)
-            # JVM __csim is NULL when its divisor is exactly 0 (NULL
-            # ranks SMALLEST in the struct comparison) and NaN from NaN
-            # inputs (ranks LARGEST under nanSafeCompare); Arrow
-            # delivers both as NaN, so the engine's own NULL flag
-            # (__csim_null) splits them exactly
-            cnull = pdf["__csim_null"].to_numpy(dtype=bool)
-            key1 = np.where(
-                cnull, -np.inf,
-                np.where(np.isnan(csim), np.inf, csim),
-            )
-            srt = pd.DataFrame({"k": key1, "i": ids}).sort_values(
-                ["k", "i"], kind="stable"
-            ).index.to_numpy()
-        else:
-            srt = pd.DataFrame({"i": ids}).sort_values(
-                "i", kind="stable"
-            ).index.to_numpy()
-        rank = np.empty(n, dtype=np.int64)
-        rank[srt] = np.arange(n)
-        rm = np.zeros(n, dtype=bool)
-        out_a: list = []
-        out_b: list = []
-        B = max(1, 4_000_000 // n)  # ~32 MB similarity slabs
-        for s0 in range(0, n, B):
-            s1 = min(n, s0 + B)
-            denom = np.outer(norms[s0:s1], norms)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                S = (V[s0:s1] @ V.T) / denom
-            for bi in range(s1 - s0):
-                i = s0 + bi
-                srow = S[bi]
-                # strict upper triangle: each unordered pair once
-                js = np.arange(i + 1, n)
-                s = srow[i + 1:]
-                # a zero divisor makes the JVM cosine NULL (Spark
-                # division semantics), which fails `>= eps` and keeps
-                # the pair — numpy sees 0/0 NaN there, which must NOT
-                # be conflated with true NaN (NaN elements), where the
-                # JVM comparison is TRUE (nanSafeCompare). Route every
-                # zero-divisor pair through the exact JVM recheck so
-                # the engine itself decides.
-                zd = denom[bi, i + 1:] == 0.0
-                nan = np.isnan(s) & ~zd
-                sure = ((s >= eps_f + margin) | nan) & ~zd
-                maybe = ~sure & (((s >= eps_f - margin) & ~zd) | zd)
-                if sure.any():
-                    jj = js[sure]
-                    worse = np.where(rank[jj] > rank[i], jj, i)
-                    rm[worse] = True
-                mj = js[maybe]
-                if len(mj):
-                    out_a.append(np.full(len(mj), ids[i]))
-                    out_b.append(ids[mj])
+            key = {"k": np.where(np.isnan(csim), np.inf, csim), "i": ids}
+        srt = pd.DataFrame(key).sort_values(
+            list(key), kind="stable"
+        ).index.to_numpy()
+        rank = np.empty(len(ids), dtype=np.int64)
+        rank[srt] = np.arange(len(ids))
+        V = vec_matrix(pdf["v"], None, "semdedup", "v", null_rows=True)
+        rm = np.zeros(len(ids), dtype=bool)
         frames = []
-        ridx = np.flatnonzero(rm)
-        if len(ridx):
+        for i, j, s in select(V, V, lo=eps_f, a_ids=ids, b_ids=ids):
+            up = i < j  # each unordered pair once
+            i, j, s = i[up], j[up], s[up]
+            sure = s >= eps_f + MARGIN  # NaN compares False: never sure
+            a, b = i[sure], j[sure]
+            rm[np.where(rank[b] > rank[a], b, a)] = True
             frames.append(pd.DataFrame({
-                "__kind": np.zeros(len(ridx), dtype="int8"),
-                "__xa": ids[ridx], "__xb": ids[ridx],
+                "__kind": np.ones((~sure).sum(), dtype="int8"),
+                "__xa": ids[i[~sure]], "__xb": ids[j[~sure]],
             }))
-        if out_a:
-            frames.append(pd.DataFrame({
-                "__kind": np.ones(sum(map(len, out_a)), dtype="int8"),
-                "__xa": np.concatenate(out_a),
-                "__xb": np.concatenate(out_b),
-            }))
-        return pd.concat(frames, ignore_index=True) if frames else empty
+        frames.append(pd.DataFrame({
+            "__kind": np.zeros(rm.sum(), dtype="int8"),
+            "__xa": ids[rm], "__xb": ids[rm],
+        }))
+        return pd.concat(frames, ignore_index=True)
 
-    dec_cols = ["cell", "id", "v"] + (
-        ["__csim", "__csim_null"] if edge_order else [])
+    dec_cols = ["cell", "id", "v"] + (["__csim"] if edge_order else [])
     decisions = (
         ok_rows.select(*dec_cols)
         .groupBy("cell")
         .applyInPandas(lambda _, pdf: _decide(pdf), schema=dec_schema)
     )
-    # margin-band pairs (|blas_cos - eps| <= 1e-9, usually none) get
-    # the former exact JVM decision: same cosine expression, same
-    # __ord struct comparison — the removed-id set stays identical
+    # margin-band and degenerate pairs get the exact JVM decision: the
+    # all-pairs form's cosine expression and __ord struct comparison
     side = rows.select("id", "v", "__ord")
     recheck = (
         decisions.filter(F.col("__kind") == 1)

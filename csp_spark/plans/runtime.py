@@ -643,9 +643,11 @@ def dynamic_apply(
         # never contain NUL), two full-frame window passes over
         # (bucket, key) derive first-trigger-ts and the as-of max, and
         # the marker rows are dropped before the pandas runner, so fn
-        # receives exactly the frame it did before. max(struct(ts,
-        # seq, value)) picks the row max_by picked ((TS, SEQ) is
-        # unique within a stream) but stays a declarative aggregate.
+        # receives exactly the frame it did before. max_by(value,
+        # struct(ts, seq)) picks the as-of row ((TS, SEQ) is unique
+        # within a stream) without ordering the value itself, so a
+        # non-orderable (map-typed) snap stream works; rows outside
+        # the as-of window carry a NULL ordering, which max_by skips.
         # NULL keys keep a NULL snap (the former left join never
         # matched them).
         df = df.select(
@@ -687,18 +689,17 @@ def dynamic_apply(
             "__t0", F.min(F.when(F.col(DYN_SRC) == "", F.col(TS))).over(wb)
         )
         for n in snap_streams:
-            m = F.when(
+            asof = F.when(
                 (F.col(DYN_SRC) == F.lit("\x00snap:" + n))
                 & (F.col(TS) <= F.col("__t0")),
-                F.struct(
-                    F.col(TS).alias("__t"),
-                    F.col(SEQ).alias("__s"),
-                    F.col(f"__snapv_{n}").alias("__v"),
-                ),
+                F.struct(F.col(TS), F.col(SEQ)),
             )
             df = df.withColumn(
                 f"__snap_{n}",
-                F.when(F.col(KEY).isNotNull(), F.max(m).over(wb)["__v"]),
+                F.when(
+                    F.col(KEY).isNotNull(),
+                    F.max_by(F.col(f"__snapv_{n}"), asof).over(wb),
+                ),
             )
         df = df.filter(
             ~F.col(DYN_SRC).startswith("\x00")

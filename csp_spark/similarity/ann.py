@@ -11,6 +11,14 @@ Two tiers:
 An IVF variant (k-means coarse quantizer) would use the same shape:
 assign → bucket column → partition pruning on bucket. LSH chosen here
 because it needs no training pass.
+
+The pairwise operators — knn_join, hard_negatives, cosine_pairs_above
+(and csp_spark.dedup.semdedup) — share one filter-and-refine kernel,
+:mod:`._kernel`: a numpy/C-BLAS pass selects a margin-guarded superset
+of the answer's pairs and only those are re-scored exactly in the JVM,
+so returned doubles are bit-identical to the all-pairs expression form.
+Its margin proof and its NaN / NULL / zero-norm / ragged /
+duplicate-id contract are written there, once.
 """
 
 from __future__ import annotations
@@ -24,49 +32,11 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._kernel import (
+    collect_small_side, dot, norm, rescore, select, vec_matrix,
+)
+
 logger = logging.getLogger(__name__)
-
-
-def _vec_matrix(series, dim: int, label: str, col: str) -> np.ndarray:
-    """Dense [n, dim] float64 matrix from an Arrow-batch embedding
-    column, failing LOUDLY on the inputs that would otherwise surface
-    as an opaque executor shape/dtype error three stages later: a NULL
-    vector or ragged lengths make np.array return an object-dtype
-    (or mis-shaped) array that any downstream matmul chokes on."""
-    try:
-        # fast path: clean fixed-dim input converts in one C pass
-        V = np.array(series.tolist(), dtype=np.float64)
-    except (TypeError, ValueError):
-        raise ValueError(
-            f"{label}: column {col!r} contains a NULL, non-numeric, "
-            "or ragged-length vector — drop or impute those rows "
-            "before indexing"
-        ) from None
-    if V.ndim != 2 or V.shape[1] != dim:
-        raise ValueError(
-            f"{label}: column {col!r} must be non-NULL fixed-dimension "
-            f"{dim} vectors; got an array of shape {V.shape} (NULL or "
-            "ragged-length embeddings in this batch)"
-        )
-    return V
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )
 
 
 def cosine(a: Column, b: Column) -> Column:
@@ -483,7 +453,7 @@ def ivf_assign(
                     **{out_col: np.empty(0, dtype=np.int32)}
                 )
                 continue
-            V = _vec_matrix(pdf[vec_col], dim, "ivf_assign", vec_col)
+            V = vec_matrix(pdf[vec_col], dim, "ivf_assign", vec_col)
             d2 = cn2[None, :] - 2.0 * (V @ C.T)
             pdf = pdf.copy()
             pdf[out_col] = d2.argmin(axis=1).astype(np.int32)
@@ -580,11 +550,8 @@ def hard_negatives(
         cells, _ = ivf_index(
             base, n_cells=n_clusters, id_col="id", vec_col="v", seed=seed
         )
-    # per-row norm ONCE below the join (the knn_join discipline):
-    # cosine() inline would recompute each side's norm per pair —
-    # |cell|x redundant interpreted aggregates. Same factor
-    # expressions in the same (n_a * n_b) order, so every double is
-    # bit-identical to the inline form and oracles are unaffected.
+    # per-row norm ONCE below the re-score join: the exact score reads
+    # each side's norm from a column instead of refolding it per pair
     celln = cells.withColumn("__vn", norm(F.col("v")))
     sizes = cells.groupBy("cell").agg(F.count(F.lit(1)).alias("__n"))
     over = sizes.filter(F.col("__n") > cap).collect()
@@ -605,38 +572,10 @@ def hard_negatives(
             "candidate subset (top-k of the sample)",
             len(over), cap, max(r["__n"] for r in over),
         )
-    # Candidate SELECTION is a per-cell BLAS pass; the returned pairs
-    # are RE-SCORED with the exact JVM expressions below (the
-    # knn_join method="blas" discipline, r9-adjudicated): the former
-    # in-cell self-join evaluated the interpreted zip_with/aggregate
-    # cosine on EVERY candidate pair — and twice per pair once
-    # Catalyst pushed the exclude_eps filter into the HashJoin's
-    # bound condition (one eval in the join predicate, one in the
-    # projection feeding the rank window). Interpreted higher-order
-    # evals are 10-100x slower than the same math in one BLAS matmul,
-    # and their megamorphic eval() call sites degrade further in
-    # long-lived sessions. The matmul selects a margin-superset of
-    # every pair that can reach rank<=k; only those <= |anchors| x
-    # (k + boundary ties) survivors pay the exact interpreted
-    # re-score, so the returned doubles are bit-identical to the
-    # former all-pairs form (multiplication is commutative bit-wise
-    # and the dot's index-order sum is symmetric, so anchor/negative
-    # orientation cannot change a rounded value).
-    #
-    # |blas - exact| per similarity is a few ulp; after both round to
-    # 6dp they differ by at most one 1e-6 grid step, so any margin in
-    # (2e-6, 3e-6) admits every true survivor (the knn_join margin
-    # proof verbatim). The kth cutoff under exclude_eps is computed
-    # over the pairs CERTAINLY below eps (s < eps - margin) — a
-    # subset of the exact kept set, so the cutoff can only be lower
-    # than the true kth and selection stays a superset.
-    margin = 2.5e-6
-    eps_f = float(exclude_eps) if exclude_eps is not None else None
-    kk = int(k)
 
     # The md5 candidate draw for over-cap cells is computed JVM-side
-    # (same split_uniform expression and seed+1 as the former sampled
-    # join) and shipped to the selection pass as a boolean column.
+    # (split_uniform at seed+1) and shipped to the selection pass as a
+    # boolean column.
     if over:
         over_ids = [r["cell"] for r in over]
         frac_map = F.create_map(*[
@@ -652,79 +591,31 @@ def hard_negatives(
     else:
         cand_flag = F.lit(True)
 
-    from pyspark.sql.types import StructField, StructType
+    from pyspark.sql.types import IntegerType, StructField, StructType
 
     id_type = cells.schema["id"].dataType
     pair_schema = StructType([
-        StructField("anchor", id_type), StructField("negative", id_type)
+        StructField("cell", IntegerType()),
+        StructField("anchor", id_type), StructField("negative", id_type),
     ])
 
     def _select_pairs(pdf):
-        import numpy as np
+        # the kernel's top-k rule per anchor row over the cell's
+        # candidates, below exclude_eps when given; each id pair once
+        # (the in-cell join-back restores duplicate-id rows)
         import pandas as pd
 
-        n = len(pdf)
         ids = pdf["id"].to_numpy()
-        out_a: list = []
-        out_n: list = []
-        if n >= 2:
-            dim = len(pdf["v"].iloc[0])
-            V = _vec_matrix(pdf["v"], dim, "hard_negatives", "v")
-            norms = np.sqrt((V * V).sum(axis=1))
-            cand_idx = np.flatnonzero(pdf["__cand"].to_numpy())
-            Vc, nc, idc = V[cand_idx], norms[cand_idx], ids[cand_idx]
-            if len(cand_idx):
-                # anchor blocks bound the similarity slab to ~32 MB
-                # regardless of cell size (cap rows x 8 B doubles)
-                B = max(1, 4_000_000 // len(cand_idx))
-                for s0 in range(0, n, B):
-                    s1 = min(n, s0 + B)
-                    S = np.round(
-                        (V[s0:s1] @ Vc.T)
-                        / np.outer(norms[s0:s1], nc), 6,
-                    )
-                    for bi in range(s1 - s0):
-                        i = s0 + bi
-                        srow = S[bi]
-                        mask = idc != ids[i]
-                        if eps_f is not None:
-                            # NaN < eps is False on both engines, so
-                            # zero-norm pairs drop out identically
-                            sure = mask & (srow < eps_f - margin)
-                            maybe = mask & (srow < eps_f + margin)
-                        else:
-                            sure = maybe = mask
-                        # kth over REAL scores only (with exclude_eps
-                        # the sure mask already excludes NaN — NaN < x
-                        # is False — but the eps-None branch lets them
-                        # through, and a NaN kth would fail every
-                        # comparison and drop the true top-k)
-                        ms = srow[sure]
-                        ms = ms[~np.isnan(ms)]
-                        if len(ms) > kk:
-                            kth = np.partition(ms, len(ms) - kk)[
-                                len(ms) - kk]
-                            # NaN ranks ABOVE every double in Spark's
-                            # DESC order — keep NaN rows like the
-                            # former window input did
-                            keep = maybe & (
-                                (srow >= kth - margin) | np.isnan(srow)
-                            )
-                        else:
-                            keep = maybe
-                        js = np.flatnonzero(keep)
-                        if len(js):
-                            out_a.append(np.full(len(js), ids[i]))
-                            out_n.append(idc[js])
-        if out_a:
-            return pd.DataFrame({
-                "anchor": np.concatenate(out_a),
-                "negative": np.concatenate(out_n),
-            })
+        cand = pdf["__cand"].to_numpy(dtype=bool)
+        V = vec_matrix(pdf["v"], None, "hard_negatives", "v", null_rows=True)
+        i, j, _ = map(np.concatenate, zip(*select(
+            V, V[cand], k=int(k), hi=exclude_eps, a_ids=ids,
+            b_ids=ids[cand],
+        )))
         return pd.DataFrame({
-            "anchor": pd.Series([], dtype=ids.dtype),
-            "negative": pd.Series([], dtype=ids.dtype),
-        })
+            "cell": pdf["cell"].iloc[0], "anchor": ids[i],
+            "negative": ids[cand][j],
+        }).drop_duplicates()
 
     pair_keys = (
         celln.select("cell", "id", "v", cand_flag.alias("__cand"))
@@ -732,27 +623,21 @@ def hard_negatives(
         .applyInPandas(lambda _, pdf: _select_pairs(pdf),
                        schema=pair_schema)
     )
-    # Exact re-score of the survivor pairs with the SAME factor
-    # expressions (and evaluation order) as the former all-pairs
-    # join, so every returned double is bit-identical and the same
-    # oracles replay it.
     va = celln.select(
-        F.col("id").alias("anchor"), F.col("v").alias("__va"),
+        "cell", F.col("id").alias("anchor"), F.col("v").alias("__va"),
         F.col("__vn").alias("__na"),
     )
     vb = celln.select(
-        F.col("id").alias("negative"), F.col("v").alias("__vb"),
+        "cell", F.col("id").alias("negative"), F.col("v").alias("__vb"),
         F.col("__vn").alias("__nb"),
     )
     directed = (
-        pair_keys.join(va, "anchor").join(vb, "negative")
+        pair_keys.join(va, ["cell", "anchor"])
+        .join(vb, ["cell", "negative"])
         .select(
             "anchor", "negative",
-            F.round(
-                dot(F.col("__va"), F.col("__vb"))
-                / (F.col("__na") * F.col("__nb")),
-                6,
-            ).alias("cos_sim"),
+            rescore(F.col("__va"), F.col("__vb"),
+                    F.col("__na"), F.col("__nb")).alias("cos_sim"),
         )
     )
     if exclude_eps is not None:
@@ -929,128 +814,79 @@ def cosine_pairs_above(
     counterpart to :func:`embedding_near_dups` (which buckets by LSH
     and only verifies within buckets).
 
-    Scale shape: the former expression form scored every |V|² pair
-    with the interpreted zip_with/aggregate cosine inside a
-    BroadcastNestedLoopJoin — the same per-PAIR megamorphic
-    interpreted-eval cliff r12 removed from knn_join/hard_negatives/
-    semdedup (measured 64 s at sf0.1 for 2000×64 vectors; executor
-    dumps show ArrayAggregate.eval dominating). Scoring is now one
-    numpy/C-BLAS matmul per corpus partition against a broadcast of
-    the full vector matrix; only pairs whose 6dp-rounded BLAS score
-    clears ``threshold − 2.5e-6`` (the knn_join margin proof: rounded
-    scores live on a 1e-6 grid and BLAS vs the JVM's sequential fold
-    differs by last-ulp, so the superset is guaranteed) — plus NaN
-    scores, which Spark's comparison ranks above every double exactly
-    as the former filter did — survive to a JVM re-score with the
-    SAME ``round(cosine(va, vb), 6)`` expression and the same
-    ``id_a < id_b`` comparison, so every returned row and double is
-    bit-identical to the former all-pairs join.
+    The vector table is collected once and broadcast; a numpy matmul
+    per scan partition selects the pairs within the kernel margin of
+    ``threshold`` (see :mod:`._kernel`), and only those are re-scored
+    with the exact JVM expression and the same ``id_a < id_b``
+    comparison, so every row and double equals the all-pairs join.
+    The scan side and the re-score side are both built from the
+    collected rows, so they see the same data.
 
-    Bounds: like the BroadcastNestedLoopJoin it replaces, the vector
-    table is collected and broadcast once (ids + float64 vectors) —
-    inherent to the exact all-pairs form; at corpus scale use
-    :func:`embedding_near_dups`. The driver collect is GUARDED: past
-    ``CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS`` (rows × dim doubles,
-    default 64M ≈ 0.5 GB) it raises instead of OOMing the driver —
-    the collect itself is row-capped, so an over-limit corpus never
-    materializes driver-side. Vectors must share one fixed dimension:
-    ragged lengths raise loudly (via the matrix build), where the
-    former join silently yielded NULL cosine and dropped the pair.
-    Duplicate ids are supported: margin selection is per id-pair and
-    the re-score joins every row back, reproducing the join's
-    multiplicity.
+    Bounds: the collect is guarded by
+    ``CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS`` doubles (default 64M ≈
+    0.5 GB); past it this raises instead of OOMing the driver — at
+    corpus scale use :func:`embedding_near_dups`. Ragged vector
+    lengths raise. Duplicate ids keep the join's multiplicity: the
+    re-score joins every row of a selected id pair back.
     """
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     base = embeddings.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).cast("array<double>").alias("v"),
-    ).filter(
-        # a NULL vector (or any NULL element) made the former join's
-        # cosine NULL, which fails every threshold — drop those rows up
-        # front so the output is unchanged and the matrix build is clean
-        F.col("v").isNotNull() & F.forall("v", lambda x: x.isNotNull())
     )
     id_type = base.schema["id"].dataType
-    out_schema = StructType([
-        StructField("id_a", id_type),
-        StructField("id_b", id_type),
-        StructField("cos_sim", DoubleType()),
-    ])
-    # Driver-collect guard (VERDICT r12 item 9, mirroring
-    # _collect_training): cap rows × dim, and cap the collect ITSELF
-    # with a row limit so the driver never pulls more than the guard
-    # allows even when the input is corpus-sized. Row order from the
-    # limit is irrelevant: candidate selection is a per-pair superset
-    # and the re-score join keys on ids, so the output set is
-    # order-independent.
-    first = base.select(F.size("v").alias("d")).first()
-    if first is None:
-        return embeddings.sparkSession.createDataFrame([], out_schema)
-    max_el = int(os.environ.get(
-        "CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS", str(64 * 1024 * 1024)
-    ))
-    cap_rows = max(max_el // max(int(first["d"]), 1), 1)
-    rows = base.limit(cap_rows + 1).collect()
-    if len(rows) > cap_rows:
-        raise ValueError(
-            f"cosine_pairs_above: vector table exceeds {cap_rows} rows "
-            f"x {int(first['d'])} dims = {max_el} doubles, past the "
-            "driver-collect guard (env "
-            "CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS). This is the "
-            "brute-force exact all-pairs form — at corpus scale use "
-            "embedding_near_dups (LSH-bucketed) instead."
-        )
-    import pandas as pd
-
-    mids = np.array([r["id"] for r in rows])
-    M = _vec_matrix(
-        pd.Series([list(r["v"]) if r["v"] is not None else None for r in rows]),
-        len(rows[0]["v"]), "cosine_pairs_above", vec_col,
+    rows = collect_small_side(
+        base, "v", "cosine_pairs_above",
+        "This is the brute-force exact all-pairs form — at corpus "
+        "scale use embedding_near_dups (LSH-bucketed) instead.",
     )
-    mn = np.linalg.norm(M, axis=1)
-    bm = embeddings.sparkSession.sparkContext.broadcast((mids, M, mn))
+    spark = embeddings.sparkSession
+    if not rows:
+        return spark.createDataFrame([], StructType([
+            StructField("id_a", id_type),
+            StructField("id_b", id_type),
+            StructField("cos_sim", DoubleType()),
+        ]))
+    small = spark.createDataFrame(rows, base.schema)
+    ids = np.array([r["id"] for r in rows])
+    M = vec_matrix([r["v"] for r in rows], None, "cosine_pairs_above",
+                   vec_col, null_rows=True)
+    bm = spark.sparkContext.broadcast((ids, M))
     thr = float(threshold)
-    margin = 2.5e-6  # see knn_join: strictly above the 2e-6 worst gap
-
     cand_schema = StructType([
-        StructField("id_a", id_type),
-        StructField("id_b", id_type),
+        StructField("id_a", id_type), StructField("id_b", id_type),
     ])
 
     def _select_pairs(batches):
-        bmids, bM, bmn = bm.value
+        import pandas as pd
+
+        bids, bM = bm.value
         for pdf in batches:
-            if pdf.empty:
-                continue
-            V = _vec_matrix(pdf["v"], bM.shape[1], "cosine_pairs_above", vec_col)
-            vids = pdf["id"].to_numpy()
-            vn = np.linalg.norm(V, axis=1)
-            with np.errstate(invalid="ignore", divide="ignore"):
-                S = np.round((V @ bM.T) / np.outer(vn, bmn), 6)
-            mask = (S >= thr - margin) | np.isnan(S)
-            ii, jj = np.nonzero(mask)
-            if len(ii):
-                yield pd.DataFrame({"id_a": vids[ii], "id_b": bmids[jj]})
+            V = vec_matrix(pdf["v"], bM.shape[1], "cosine_pairs_above",
+                           vec_col, null_rows=True)
+            for i, j, _ in select(V, bM, lo=thr):
+                yield pd.DataFrame({"id_a": pdf["id"].to_numpy()[i],
+                                    "id_b": bids[j]})
 
     cand = (
-        base.mapInPandas(_select_pairs, schema=cand_schema)
-        # one candidate per id PAIR (each unordered pair is seen from
-        # both orientations across partitions; dup-id multiplicity is
-        # reinstated by the row-level join-back below)
+        small.mapInPandas(_select_pairs, schema=cand_schema)
+        # one candidate per id PAIR (each unordered pair is seen in both
+        # orientations; dup-id multiplicity is reinstated by the
+        # row-level join-back below)
         .filter(F.col("id_a") < F.col("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
-    # exact re-score: the SAME expressions, casts and comparison as the
-    # former all-pairs join, evaluated only on the margin survivors
+    side = small.withColumn("n", norm(F.col("v")))
     return (
-        cand.join(
-            F.broadcast(base.select(F.col("id").alias("id_a"),
-                                    F.col("v").alias("va"))), "id_a")
-        .join(
-            F.broadcast(base.select(F.col("id").alias("id_b"),
-                                    F.col("v").alias("vb"))), "id_b")
-        .withColumn("cos_sim", F.round(cosine(F.col("va"), F.col("vb")), 6))
+        cand.join(F.broadcast(side.select(
+            F.col("id").alias("id_a"), F.col("v").alias("va"),
+            F.col("n").alias("na"))), "id_a")
+        .join(F.broadcast(side.select(
+            F.col("id").alias("id_b"), F.col("v").alias("vb"),
+            F.col("n").alias("nb"))), "id_b")
+        .withColumn("cos_sim", rescore(F.col("va"), F.col("vb"),
+                                       F.col("na"), F.col("nb")))
         .filter(F.col("cos_sim") >= F.lit(thr))
         .select("id_a", "id_b", "cos_sim")
     )
@@ -1070,235 +906,128 @@ def knn_join(
     """Exact k-nearest-neighbors JOIN: for EVERY query row, the top-k
     corpus rows by cosine — the batch shape a training pipeline needs
     (ann retrieval for eval sets, hard-negative mining), vs
-    cosine_topk's single literal query.
+    cosine_topk's single literal query. Ranking is on the 6dp-rounded
+    cosine, ties broken by corpus id; ``exclude_self`` drops pairs whose
+    query and corpus ids are equal.
 
-    100 TB plan: broadcast the (small) query side → the |C|x|Q| score
-    computation is map-side over the corpus scan with ZERO shuffle of
-    corpus vectors. The only shuffled rows are per-partition top-k
-    survivors (<= partitions x |Q| x k, independent of corpus size),
-    selected map-side BEFORE the global per-query window. Never
-    broadcast a large query side — flip the arguments and transpose
-    the result instead.
+    100 TB plan: the (small) query side is collected once — guarded by
+    ``CSP_SPARK_PAIRS_COLLECT_MAX_ELEMENTS`` doubles, raising past it —
+    and broadcast, so scoring is map-side over the corpus scan with
+    ZERO shuffle of corpus rows. Never pass a large query side — flip
+    the arguments and transpose the result instead.
 
-    Scoring (both method values — the names are kept for call-site
-    compat): one Arrow pass SELECTS each partition's top-k candidates
-    against the whole query matrix with a numpy matmul (C-BLAS;
-    ~10-50x an interpreted zip_with/aggregate scorer's throughput at
-    large |C|x|Q|), keeping a 2.5e-6 safety margin around the k-th
-    score (strictly above the worst-case 2e-6 rounding gap, below the
-    next 1e-6 grid step); the surviving <= partitions x |Q| x k rows
-    are then RE-SCORED with JVM-side sequential zip_with/aggregate
-    sums — bit-reproducible by any engine replaying a sequential sum
-    (the DuckDB oracle). BLAS-vs-sequential summation differs by
-    last-ulp (<< the margin), so the exact top-k set provably survives
-    selection and the returned values are bit-identical to the former
-    all-pairs interpreted scorer, which r12 removed after executor
-    thread dumps showed its ZipWith/ArrayAggregate eval() dominating
-    (higher-order lambdas never enter whole-stage codegen, and their
-    megamorphic call sites degrade further in long sessions). (An
-    unrolled codegen sum was measured and rejected twice, r9 and r12:
-    64-dim element_at chains exceed Janino's 64KB method limit and
-    the compile latency exceeds the interpreted win.)
+    Scoring has one path (``method`` accepts ``"exact"`` and
+    ``"blas"`` for existing call sites; anything else raises): each
+    corpus partition keeps a running pool of the rows that the kernel's
+    top-k rule (see :mod:`._kernel`) selects for any query, re-selecting
+    the pool with every Arrow batch, and ships only those
+    ``<= partitions x |Q| x (k + ties)`` rows, vectors included, to the
+    exact JVM re-score and the global per-query window. The returned
+    doubles are bit-identical to scoring every pair with the JVM
+    expressions, and the same DuckDB oracle replays them.
     """
     from pyspark.sql import Window
+    from pyspark.sql.types import (
+        ArrayType, BooleanType, DoubleType, IntegerType, StructField,
+        StructType,
+    )
 
+    if method not in ("exact", "blas"):
+        raise ValueError(
+            f"knn_join method must be 'exact' or 'blas', got {method!r}"
+        )
     q = queries.select(
         F.col(query_id).alias("__qid"), F.col(query_vec).alias("__qv")
     )
-    if method in ("blas", "exact"):
-        from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+    qid_type = q.schema["__qid"].dataType
+    cid_type = corpus.schema[corpus_id].dataType
+    spark = corpus.sparkSession
+    qrows = collect_small_side(
+        q, "__qv", "knn_join",
+        "Pass the larger table as the corpus: flip the arguments and "
+        "transpose the result.",
+    )
+    if not qrows:
+        return spark.createDataFrame([], StructType([
+            StructField(query_id, qid_type),
+            StructField(corpus_id, cid_type),
+            StructField("rank", IntegerType(), False),
+            StructField("cos_sim", DoubleType()),
+        ]))
+    qids = np.array([r["__qid"] for r in qrows])
+    Q = vec_matrix([r["__qv"] for r in qrows], None, "knn_join",
+                   query_vec, null_rows=True)
+    bq = spark.sparkContext.broadcast((qids, Q))
+    kk = int(k)
 
-        sel_schema = StructType([
-            StructField("__qid", q.schema["__qid"].dataType),
-            StructField("__cid", corpus.schema[corpus_id].dataType),
-            StructField("__cv", ArrayType(DoubleType())),
-        ])
-        # Collect + broadcast the query side (small by the same
-        # contract that lets the exact path broadcast-join it).
-        qrows = q.collect()
-        if not qrows:  # (0,) qmat would break axis-1 norms / matmul
-            from pyspark.sql.types import IntegerType
+    def _select_topk(batches):
+        import pandas as pd
 
-            empty = StructType([
-                StructField(query_id, q.schema["__qid"].dataType),
-                StructField(corpus_id, corpus.schema[corpus_id].dataType),
-                StructField("rank", IntegerType(), False),
-                StructField("cos_sim", DoubleType()),
-            ])
-            return corpus.sparkSession.createDataFrame([], empty)
-        qids = np.array([r["__qid"] for r in qrows])
-        qmat = np.array([list(r["__qv"]) for r in qrows], dtype=np.float64)
-        qnorm = np.linalg.norm(qmat, axis=1)
-        bq = corpus.sparkSession.sparkContext.broadcast((qids, qmat, qnorm))
-        # |blas_score - exact_score| is a few ulp (~1e-15); after both
-        # round to 6dp they differ by at most one 1e-6 step at a
-        # rounding boundary. The worst admissible gap is exactly 2e-6
-        # (kth-tie rounded one step down, kth blas score one step up),
-        # and `kth - margin` itself carries ~1 ulp of float error — so
-        # the margin must sit STRICTLY above 2e-6. Rounded scores live
-        # on a 1e-6 grid, so any margin in (2e-6, 3e-6) admits no extra
-        # survivors; 2.5e-6 keeps every member of the exact top-k
-        # (including kth-value ties) with zero recall or cost change.
-        margin = 2.5e-6
+        bqids, bQ = bq.value
+        pool = ()
+        for pdf in batches:
+            # the pool so far plus this batch, re-selected as one matrix
+            batch = (pdf["__cid"].to_numpy(), pdf["__cv"].to_numpy(),
+                     vec_matrix(pdf["__cv"], bQ.shape[1], "knn_join",
+                                corpus_vec, null_rows=True))
+            cids, cvs, C = (tuple(map(np.concatenate, zip(pool, batch)))
+                            if pool else batch)
+            i, j, _ = map(np.concatenate, zip(*select(
+                bQ, C, k=kk, a_ids=bqids if exclude_self else None,
+                b_ids=cids if exclude_self else None,
+            )))
+            rows = np.unique(j)
+            pool = (cids[rows], cvs[rows], C[rows])
+            j = np.searchsorted(rows, j)
+        if pool and len(i):
+            # each (query id, corpus row) once: the re-score join by
+            # query id restores every query row sharing that id
+            out = pd.DataFrame({"__qid": bqids[i], "__j": j}).drop_duplicates()
+            j = out.pop("__j").to_numpy()
+            cids, cvs, C = pool
+            yield out.assign(__cid=cids[j], __cv=cvs[j],
+                             __cnan=np.isnan(C[j]).any(axis=1))
 
-        def _select_topk(batches):
-            import pandas as pd
-
-            bqids, bqmat, bqnorm = bq.value
-            pools: "list[pd.DataFrame]" = []
-            for pdf in batches:
-                if pdf.empty:  # (0,) array would break the matmul
-                    continue
-                C = _vec_matrix(pdf["__cv"], bqmat.shape[1],
-                                "knn_join", corpus_vec)
-                cids = pdf["__cid"].to_numpy()
-                cn = np.linalg.norm(C, axis=1)
-                s = np.round(
-                    (C @ bqmat.T) / np.outer(cn, bqnorm), 6
-                )  # |batch| x |Q|
-                for j in range(len(bqids)):
-                    idx = np.arange(len(cids))
-                    if exclude_self:
-                        idx = idx[cids != bqids[j]]
-                    ss = s[idx, j]
-                    if len(idx) > k:
-                        # kth over REAL scores only: a NaN kth (>= k
-                        # degenerate corpus rows) would fail every
-                        # comparison and silently drop the true top-k.
-                        # NaN-scored rows stay candidates — the exact
-                        # final window replays the JVM order (NaN
-                        # pairs rank first, zero-norm pairs NULL-last)
-                        nanm = np.isnan(ss)
-                        real = ss[~nanm]
-                        if len(real) > k:
-                            kth = np.partition(real, len(real) - k)[
-                                len(real) - k]
-                            keep = (ss >= kth - margin) | nanm
-                            idx, ss = idx[keep], ss[keep]
-                    pools.append(pd.DataFrame({
-                        "__qid": bqids[j],
-                        "__cid": cids[idx],
-                        "__cv": pdf["__cv"].iloc[idx].to_numpy(),
-                        "__blas": ss,
-                    }))
-            if pools:
-                pool = pd.concat(pools).sort_values(
-                    ["__qid", "__blas"], ascending=[True, False]
-                )
-
-                def _kth(g):
-                    # pandas sorts NaN last, so dropna keeps the real
-                    # scores in descending order; all-NaN groups keep
-                    # everything through the isna() arm below
-                    r = g.dropna()
-                    if r.empty:
-                        return -np.inf
-                    return r.iloc[min(k, len(r)) - 1]
-
-                kthv = pool.groupby("__qid", sort=False)["__blas"].transform(_kth)
-                yield pool.loc[
-                    (pool["__blas"] >= kthv - margin) | pool["__blas"].isna(),
-                    ["__qid", "__cid", "__cv"],
-                ]
-
-        cand = (
-            corpus.select(
-                F.col(corpus_id).alias("__cid"),
-                F.col(corpus_vec).cast("array<double>").alias("__cv"),
-            )
-            .mapInPandas(_select_topk, schema=sel_schema)
-        )
-        # Exact re-score of the tiny survivor set with the SAME factor
-        # expressions (and evaluation order) as the exact path below,
-        # so every returned double is bit-identical to method="exact"
-        # and the same DuckDB oracle replays it. The query table is
-        # rebuilt from the rows already collected for the broadcast —
-        # no second scan of the query side's source.
-        qn = (
-            corpus.sparkSession.createDataFrame(qrows, schema=q.schema)
-            .select(
-                "__qid",
-                F.col("__qv").cast("array<double>").alias("__qv"),
-            )
-            .withColumn("__qn", norm(F.col("__qv")))
-        )
-        pruned = (
-            cand.withColumn("__cn", norm(F.col("__cv")))
-            .join(F.broadcast(qn), "__qid")
-            .select(
-                "__qid",
-                "__cid",
-                F.round(
-                    dot(F.col("__cv"), F.col("__qv"))
-                    / (F.col("__cn") * F.col("__qn")),
-                    6,
-                ).alias("cos_sim"),
-            )
-        )
-    else:
-        # Precompute each side's norm ONCE per row below the join
-        # (cosine() inline would recompute the corpus norm per query
-        # and the query norm per corpus row — |C|x|Q| redundant
-        # interpreted aggregates). Same factor expressions in the same
-        # (norm_c * norm_q) order, so every double is bit-identical to
-        # the inline form and the oracle comparison is unaffected.
-        qn = q.select(
-            "__qid",
-            F.col("__qv").cast("array<double>").alias("__qv"),
-        ).withColumn("__qn", norm(F.col("__qv")))
-        cn = corpus.select(
+    # Arrow rewrites a NaN element to NULL on the way OUT of pandas, and
+    # a NULL element arrives in pandas as NaN; the re-score must see the
+    # original vector. A vector with a NULL element scores NULL exactly
+    # as a NULL vector does, so it enters as NULL; every NULL element of
+    # a carried vector is then a NaN, and __cnan restores it. (SQL text:
+    # one JVM call each, where Column lambdas cost a py4j round trip per
+    # node at plan build.)
+    cand = (
+        corpus.select(
             F.col(corpus_id).alias("__cid"),
             F.col(corpus_vec).cast("array<double>").alias("__cv"),
-        ).withColumn("__cn", norm(F.col("__cv")))
-        scored = (
-            cn.join(F.broadcast(qn))
-            .select(
-                "__qid",
-                "__cid",
-                F.round(
-                    dot(F.col("__cv"), F.col("__qv"))
-                    / (F.col("__cn") * F.col("__qn")),
-                    6,
-                ).alias("cos_sim"),
-            )
         )
-        if exclude_self:
-            scored = scored.filter(F.col("__qid") != F.col("__cid"))
-
-        # local pre-top-k WITHOUT shuffling the |C|x|Q| scored set: a
-        # mapInPandas pass keeps a running top-k per query within each
-        # corpus partition (selection only — every similarity was
-        # already computed and rounded JVM-side, so no float math
-        # crosses the Arrow boundary and the oracle stays bit-exact).
-        def _local_topk(batches):
-            import pandas as pd
-
-            best: "pd.DataFrame | None" = None
-            for pdf in batches:
-                pool = pdf if best is None else pd.concat((best, pdf))
-                pool = pool.sort_values(
-                    ["__qid", "cos_sim", "__cid"], ascending=[True, False, True]
-                )
-                best = pool.groupby("__qid", sort=False).head(k)
-            if best is not None:
-                yield best
-
-        # Degenerate scores NEVER enter the Python pruner (r13, the
-        # ADVICE fix): pandas sorts NaN last so head(k) dropped rows the
-        # final desc window ranks FIRST — and the Arrow boundary itself
-        # rewrites JVM NaN to NULL (pandas NaN -> Arrow null), flipping
-        # a rank-1 row to rank-last. NaN/NULL cos_sim rows (zero-norm or
-        # NaN-element vectors only; real corpora carry none) bypass the
-        # pruner JVM-side, so their exact values reach the final window
-        # untouched. The scoring projection is map-side over the corpus
-        # scan, so the split costs a second pass of this fallback path
-        # only, never a shuffle.
-        degen = F.col("cos_sim").isNull() | F.isnan("cos_sim")
-        pruned = (
-            scored.filter(~degen)
-            .mapInPandas(_local_topk, schema=scored.schema)
-            .unionByName(scored.filter(degen))
+        .select("__cid", F.expr(
+            "IF(exists(__cv, x -> x IS NULL), NULL, __cv)").alias("__cv"))
+        .mapInPandas(_select_topk, schema=StructType([
+            StructField("__qid", qid_type),
+            StructField("__cid", cid_type),
+            StructField("__cv", ArrayType(DoubleType())),
+            StructField("__cnan", BooleanType()),
+        ]))
+        .withColumn("__cv", F.expr(
+            "IF(__cnan, transform(__cv, x -> coalesce(x, double('NaN'))),"
+            " __cv)"))
+    )
+    # the re-score's query table comes from the rows already collected
+    # for the broadcast: no second scan of the query side's source
+    qn = (
+        spark.createDataFrame(qrows, schema=q.schema)
+        .select("__qid", F.col("__qv").cast("array<double>").alias("__qv"))
+        .withColumn("__qn", norm(F.col("__qv")))
+    )
+    pruned = (
+        cand.withColumn("__cn", norm(F.col("__cv")))
+        .join(F.broadcast(qn), "__qid")
+        .select(
+            "__qid", "__cid",
+            rescore(F.col("__cv"), F.col("__qv"),
+                    F.col("__cn"), F.col("__qn")).alias("cos_sim"),
         )
+    )
     final = Window.partitionBy("__qid").orderBy(F.desc("cos_sim"), F.col("__cid"))
     return (
         pruned.withColumn("rank", F.row_number().over(final))
@@ -1404,7 +1133,7 @@ def pq_index(
             if pdf.empty:  # (0,) array would break the matmul
                 yield pdf.assign(codes=np.empty(0, dtype=object))
                 continue
-            V = _vec_matrix(pdf[vec_col], m * dsub, "pq_index", vec_col)
+            V = vec_matrix(pdf[vec_col], m * dsub, "pq_index", vec_col)
             codes = np.empty((len(V), m), dtype=np.int32)
             for j in range(m):
                 S = V[:, j * dsub:(j + 1) * dsub]

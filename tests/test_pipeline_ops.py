@@ -2490,12 +2490,13 @@ def test_knn_join_degenerate_zero_corpus_rows(spark):
 
 
 def test_knn_join_reference_path_nan_rows(spark):
-    # the non-BLAS fallback path (any method outside {"blas","exact"}):
-    # its per-partition pandas pre-top-k sorted NaN cos_sim LAST and
-    # head(k)-pruned it, while the final Spark desc window ranks JVM
-    # NaN FIRST — with >= k NaN-scored corpus rows the returned top-k
-    # was wrong. NaN rows now pass through un-pruned (r13 ADVICE fix,
-    # mirroring the r12 BLAS-pool guard).
+    # NaN-element corpus rows through knn_join's single path, against
+    # the pure-JVM reference: the Spark desc window ranks JVM NaN
+    # FIRST, so with >= k NaN-scored corpus rows they ARE the top-k.
+    # Selection must keep them (non-finite scores are always
+    # candidates) and the carried vectors must reach the re-score with
+    # their NaN intact (Arrow turns a NaN element into NULL on the way
+    # out of pandas, which would score NULL and rank last).
     import math
 
     from pyspark.sql import Window
@@ -2516,8 +2517,7 @@ def test_knn_join_reference_path_nan_rows(spark):
         ],
         "cid int, embedding array<double>",
     )
-    out = knn_join(q, corpus, k=3, query_id="qid", corpus_id="cid",
-                   method="reference").collect()
+    out = knn_join(q, corpus, k=3, query_id="qid", corpus_id="cid").collect()
     # pure-JVM reference: identical expressions and the same window
     qn = q.select(F.col("qid").alias("__qid"),
                   F.col("embedding").cast("array<double>").alias("__qv"))
@@ -2541,6 +2541,17 @@ def test_knn_join_reference_path_nan_rows(spark):
     assert got_s == exp_s
     # the NaN-scored rows ARE the JVM top-3 here (desc ranks NaN first)
     assert [t[1] for t in exp_s] == [3, 4, 5]
+
+
+def test_knn_join_method_typo_raises(spark, emb):
+    # one scoring path: "exact" and "blas" both name it, and any other
+    # method string fails loudly instead of picking a slower fork
+    from csp_spark.similarity import knn_join
+
+    qs = emb.select(F.col("vec_id").alias("qid"), "embedding")
+    cs = emb.select(F.col("vec_id").alias("cid"), "embedding")
+    with pytest.raises(ValueError, match="method"):
+        knn_join(qs, cs, k=3, method="BLAS")
 
 
 def test_hard_negatives_eps_none_zero_corpus_rows(spark):
@@ -2636,3 +2647,115 @@ def test_cosine_pairs_above_collect_guard(spark, emb, monkeypatch):
     assert cosine_pairs_above(
         emb, 0.99, id_col="vec_id", vec_col="embedding"
     ).count() >= 0  # in-cap path unchanged
+
+
+# ------------------------------------- similarity kernel contract (fast)
+
+
+def _kernel_corpus(spark):
+    """Small generated corpus carrying every input the similarity
+    kernel's contract names: small-integer vectors (many exact cosine
+    ties), exact duplicates and a scaled copy under new ids (cos = 1.0
+    ties at the k-th boundary), a duplicate id with a different vector,
+    a NaN element, a NULL vector, a NULL element and three zero-norm
+    vectors (>= k of them, so they crowd the k-th score)."""
+    rng = np.random.RandomState(3)
+    base = rng.randint(-3, 4, size=(14, 4)).astype(float).tolist()
+    rows = [(i, v) for i, v in enumerate(base)]
+    rows += [(100 + i, base[i]) for i in range(3)]
+    rows += [(103, [2.0 * x for x in base[3]])]
+    rows += [(5, rng.randint(-3, 4, size=4).astype(float).tolist())]
+    nan = float("nan")
+    rows += [(200, [nan, 1.0, 0.0, 0.0]), (201, None),
+             (202, [1.0, None, 0.0, 0.0]),
+             (203, [0.0] * 4), (204, [0.0] * 4), (205, [0.0] * 4)]
+    return spark.createDataFrame(rows, "vec_id int, embedding array<double>")
+
+
+def _canon(rows):
+    # repr keeps NaN, None and every double's exact bits comparable
+    return sorted(tuple(repr(x) for x in r) for r in rows)
+
+
+def _spark_desc(c):
+    # Spark's DESC order for a double: NaN first, NULL last
+    if c is None:
+        return (2, 0.0)
+    return (0, 0.0) if math.isnan(c) else (1, -c)
+
+
+def _ranked(pairs, k):
+    """The per-anchor row_number window over (a, b, cos) rows, ordered
+    by cos DESC then b."""
+    by_a = {}
+    for p in pairs:
+        by_a.setdefault(p[0], []).append(p)
+    return [
+        (a_, b_, rk, c)
+        for rows in by_a.values()
+        for rk, (a_, b_, c) in enumerate(
+            sorted(rows, key=lambda p: (_spark_desc(p[2]), p[1]))[:k], 1)
+    ]
+
+
+def test_similarity_kernel_callers_match_jvm_forms(spark):
+    """knn_join, hard_negatives, cosine_pairs_above and semdedup — all
+    on the BLAS-select + exact-rescore kernel (similarity/_kernel.py) —
+    each equal their pure-JVM pair/window form row for row and bit for
+    bit on a generated corpus holding every degenerate input of the
+    kernel's contract. The JVM scores every row pair once, with the
+    all-pairs expressions; the windows and filters replay Spark's
+    comparison semantics (NaN above every double, NULL failing every
+    comparison)."""
+    from csp_spark.similarity import (
+        cosine, cosine_pairs_above, hard_negatives, knn_join,
+    )
+
+    df = _kernel_corpus(spark)
+    a = df.select(F.col("vec_id").alias("a"), F.col("embedding").alias("va"))
+    b = df.select(F.col("vec_id").alias("b"), F.col("embedding").alias("vb"))
+    raw = cosine(F.col("va"), F.col("vb"))
+    jvm = [
+        (r["a"], r["b"], r["c"], r["raw"]) for r in a.crossJoin(b).select(
+            "a", "b", F.round(raw, 6).alias("c"), raw.alias("raw")
+        ).collect()
+    ]
+    other = [(x, y, c) for x, y, c, _ in jvm if x != y]
+
+    def below(c, t):
+        return c is not None and not math.isnan(c) and c < t
+
+    def at_least(c, t):  # NaN >= t is TRUE in Spark
+        return c is not None and (math.isnan(c) or c >= t)
+
+    # knn_join: the queries include the dup id 5 and the NaN/NULL rows
+    qids = {i for i in range(0, 300, 3)} | {5, 200, 201}
+    got = knn_join(
+        df.filter(F.col("vec_id").isin(*qids)).select(
+            F.col("vec_id").alias("qid"), "embedding"),
+        df.select(F.col("vec_id").alias("cid"), "embedding"),
+        k=3, query_id="qid", corpus_id="cid",
+    ).select("qid", "cid", "rank", "cos_sim").collect()
+    assert _canon(got) == _canon(
+        _ranked([p for p in other if p[0] in qids], 3))
+
+    # hard_negatives (n_clusters=1: one cell, the exact all-pairs form)
+    for eps in (None, 0.99):
+        got = hard_negatives(df, k=3, n_clusters=1, exclude_eps=eps).select(
+            "anchor", "negative", "rank", "cos_sim").collect()
+        exp = _ranked(
+            [p for p in other if eps is None or below(p[2], eps)], 3)
+        assert _canon(got) == _canon(exp), eps
+
+    # cosine_pairs_above: the id_a < id_b all-pairs join
+    got = cosine_pairs_above(df, 0.5).collect()
+    exp = [(x, y, c) for x, y, c, _ in jvm if x < y and at_least(c, 0.5)]
+    assert _canon(got) == _canon(exp)
+
+    # semdedup: a row is removed iff a lower id is eps-similar (raw)
+    out = DD.semdedup(df, eps=0.9, n_clusters=1, keep="min_id").toPandas()
+    exp = {x for x, y, _, r in jvm if y < x and at_least(r, 0.9)}
+    assert set(out[out.kept == 0].vec_id) == exp
+    # the generated corpus exercises the contract it claims to
+    assert exp and any(c is None for _, _, c in other)
+    assert any(c is not None and math.isnan(c) for _, _, c in other)

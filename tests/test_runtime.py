@@ -147,6 +147,38 @@ def test_dynamic_snap_and_attach(spark):
     assert [v for _, v in got["b"]] == [3.0 + 20.0 + 1]
 
 
+def test_dynamic_snap_map_typed_stream(spark):
+    """A snapped stream whose value is NOT orderable (map-typed) snaps
+    like any other: the as-of pick orders on (ts, seq) only, never on
+    the value itself."""
+    from csp_spark.plans.runtime import dynamic_apply, snap
+
+    sch = "key string, ts timestamp, seq long, value double"
+    trig = [("a", START + TD(seconds=2), 0, 1.0),
+            ("a", START + TD(seconds=4), 0, 2.0),
+            ("b", START + TD(seconds=3), 0, 3.0),
+            ("c", START, 0, 5.0)]
+    ref_rows = [("a", START + TD(seconds=1), 0, {"x": 10.0}),
+                ("a", START + TD(seconds=3), 0, {"x": 11.0}),
+                ("b", START + TD(seconds=1), 0, {"x": 20.0})]
+    x = TickStream(spark.createDataFrame(trig, sch))
+    ref = TickStream(spark.createDataFrame(
+        ref_rows, "key string, ts timestamp, seq long, value map<string,double>"))
+
+    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
+        m = snap(pdf, "ref")
+        out = pdf[pdf["__src"] == ""][["key", "ts", "seq", "value"]].copy()
+        out["value"] = out["value"] + (dict(m)["x"] if m is not None else -1.0)
+        return out
+
+    got = dynamic_apply(x, fn, sch, snap_streams={"ref": ref}).collect_all()
+    # a: last ref at-or-before its first trigger (t=2) is {"x": 10.0};
+    # c: ref never ticked by its first trigger, so the snap is None
+    assert [v for _, v in got["a"]] == [11.0, 12.0]
+    assert [v for _, v in got["b"]] == [23.0]
+    assert [v for _, v in got["c"]] == [4.0]
+
+
 def test_running_unkeyed_matches_global_window(spark):
     """Two-pass prefix plan equals the single-window form bit-for-bit
     for all four associative aggregates, and the plan's data windows
